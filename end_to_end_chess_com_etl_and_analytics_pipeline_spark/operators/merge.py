@@ -15,15 +15,22 @@ Here both are generic DataFrame combinators.  Scale notes:
   (run it per arriving month against only the partitions the batch
   touches) or a Delta/Iceberg MERGE; the operator itself is the kernel
   either way.
-- ``insert_if_absent`` is a null-safe LEFT ANTI join.  SQL ``NOT IN``
-  returns *no rows* if the subquery yields a NULL; ``left_anti`` keeps
-  non-matching rows.  We expose ``not_in_semantics=True`` to replicate
-  the SQL behaviour exactly (SURVEY.md §4.3) and pin it with tests.
+- ``absent_rows`` is the insert-if-absent kernel: the distinct incoming
+  rows whose key is not in ``existing``, by a LEFT ANTI join on the
+  keys.  The dimension sinks (streaming gold, warehouse) append exactly
+  these rows, so a dim is never rewritten and a replayed batch appends
+  nothing.  ``insert_if_absent`` is the same rows unioned with
+  ``existing``, for callers that want the merged table as a frame.
+- Keys compare null-safe (NULL matches NULL), so a NULL-key row is
+  appended once, not once per replay.  SQL ``NOT IN`` instead returns
+  *no rows* if the subquery yields a NULL; ``not_in_semantics=True``
+  replicates that exactly (SURVEY.md §4.3) and tests pin both.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -60,22 +67,23 @@ def latest_wins(
     )
 
 
-def insert_if_absent(
+def absent_rows(
     existing: DataFrame | None,
     incoming: DataFrame,
     keys: Sequence[str],
     not_in_semantics: bool = False,
 ) -> DataFrame:
-    """Insert-if-absent: rows of ``incoming`` whose key is not already in
-    ``existing``, unioned with ``existing``; result deduplicated like the
-    reference's set-semantics UNION (python_scripts.py:269-271).
+    """Distinct rows of ``incoming`` whose ``keys`` are absent from
+    ``existing`` (which needs only the key columns).  ``existing=None``
+    means an empty target: every distinct incoming row qualifies.
 
     ``not_in_semantics=True`` replicates SQL ``NOT IN`` exactly: if
-    ``existing`` contains a NULL key, *no* incoming rows qualify.
+    ``existing`` contains a NULL key, *no* incoming rows qualify, and
+    NULL incoming keys never do.
     """
+    fresh = incoming.distinct()
     if existing is None:
-        return incoming.distinct()
-    fresh = incoming
+        return fresh
     if not_in_semantics:
         for k in keys:
             # NOT IN is null-poisoned: any NULL in the subquery result
@@ -86,5 +94,26 @@ def insert_if_absent(
                 how="left",
             ).where(F.col("__poison").isNull()).drop("__poison")
             fresh = fresh.where(F.col(k).isNotNull())
-    fresh = fresh.join(existing.select(*keys).distinct(), list(keys), "left_anti")
+    # the existing side's keys are renamed so the condition resolves by
+    # name even when both sides share a lineage
+    old = existing.select(*[F.col(k).alias(f"__old_{k}") for k in keys])
+    match = reduce(
+        lambda a, b: a & b,
+        [F.col(k).eqNullSafe(F.col(f"__old_{k}")) for k in keys],
+    )
+    return fresh.join(old, match, "left_anti")
+
+
+def insert_if_absent(
+    existing: DataFrame | None,
+    incoming: DataFrame,
+    keys: Sequence[str],
+    not_in_semantics: bool = False,
+) -> DataFrame:
+    """Insert-if-absent as a frame: ``absent_rows`` unioned with
+    ``existing``, deduplicated like the reference's set-semantics UNION
+    (python_scripts.py:269-271)."""
+    fresh = absent_rows(existing, incoming, keys, not_in_semantics)
+    if existing is None:
+        return fresh
     return fresh.unionByName(existing).distinct()

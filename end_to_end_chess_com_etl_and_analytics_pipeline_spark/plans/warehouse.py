@@ -21,15 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.merge import insert_if_absent, latest_wins
+from ..operators.merge import absent_rows, latest_wins
+from ..schemas import DIM_KEYS
 from ..sources.tables import WAREHOUSE_SCHEMA, create_warehouse
-
-DIM_KEYS = {
-    "dim_openings": ["pgn_eco_url"],
-    "dim_date": ["game_date"],
-    "dim_time_control": ["time_control"],
-    "dim_results": ["result_code"],
-}
 
 
 def read_watermark(spark: SparkSession, schema: str = WAREHOUSE_SCHEMA):
@@ -50,13 +44,14 @@ def load_warehouse(
     watermark-filtered latest-wins fact merge."""
     create_warehouse(spark, location=location, schema=schema)
 
+    # Dims are append-only: each load appends just the incoming rows whose
+    # key the table lacks, so no dim is ever deleted and rewritten, and
+    # re-running a load appends nothing.
     for dim, keys in DIM_KEYS.items():
-        existing = spark.table(f"{schema}.{dim}")
-        target_cols = existing.columns
-        incoming = gold[dim].select(*target_cols)
-        merged = insert_if_absent(existing, incoming, keys)
-        # localCheckpoint breaks lineage off the table being overwritten
-        merged.localCheckpoint().write.insertInto(f"{schema}.{dim}", overwrite=True)
+        table = f"{schema}.{dim}"
+        existing = spark.table(table)
+        incoming = gold[dim].select(*existing.columns)
+        absent_rows(existing, incoming, keys).write.insertInto(table)
 
     fact_table = f"{schema}.fact_games"
     existing_fact = spark.table(fact_table)

@@ -161,6 +161,22 @@ DIM_RESULTS_SCHEMA = T.StructType(
     ]
 )
 
+# Primary key of each dimension: the insert-if-absent key of both the
+# gold and the warehouse dim sinks.
+DIM_KEYS: dict[str, list[str]] = {
+    "dim_openings": ["pgn_eco_url"],
+    "dim_date": ["game_date"],
+    "dim_time_control": ["time_control"],
+    "dim_results": ["result_code"],
+}
+
+DIM_SCHEMAS: dict[str, T.StructType] = {
+    "dim_openings": DIM_OPENINGS_SCHEMA,
+    "dim_date": DIM_DATE_SCHEMA,
+    "dim_time_control": DIM_TIME_CONTROL_SCHEMA,
+    "dim_results": DIM_RESULTS_SCHEMA,
+}
+
 # openings.csv lookup (dev_files/Data/openings.csv — 3,513 rows)
 OPENINGS_CSV_SCHEMA = T.StructType(
     [

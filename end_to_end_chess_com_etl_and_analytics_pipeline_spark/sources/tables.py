@@ -25,10 +25,8 @@ from pyspark.sql import types as T
 from ..session import local_df
 
 from ..schemas import (
-    DIM_DATE_SCHEMA,
-    DIM_OPENINGS_SCHEMA,
     DIM_RESULTS_SCHEMA,
-    DIM_TIME_CONTROL_SCHEMA,
+    DIM_SCHEMAS,
     FACT_GAMES_SCHEMA,
     TESTDATA_SCHEMAS,
 )
@@ -556,9 +554,10 @@ def write_jdbc(
 # declared DDL and produced gold schema disagree (SURVEY.md §1.3), the
 # column lists here are GENERATED from the engine's own StructTypes, so
 # warehouse and gold cannot drift.  Spark's catalog has no enforced PK
-# constraints — key uniqueness is guaranteed upstream by the DISTINCT
-# dim builds and asserted in tests — so the PKs are documented, not
-# declared.
+# constraints — key uniqueness is guaranteed by the DISTINCT dim builds
+# and the key-absent appends (operators.merge.absent_rows) and asserted
+# in tests — so the PKs (schemas.DIM_KEYS for the dims, game_url for the
+# fact) are documented, not declared.
 WAREHOUSE_SCHEMA = "chess_dw"
 
 
@@ -567,11 +566,8 @@ def _ddl_columns(schema: T.StructType) -> str:
 
 
 WAREHOUSE_TABLES: dict[str, str] = {
-    "dim_openings": _ddl_columns(DIM_OPENINGS_SCHEMA),  # PK: pgn_eco_url
-    "dim_date": _ddl_columns(DIM_DATE_SCHEMA),  # PK: game_date
-    "dim_time_control": _ddl_columns(DIM_TIME_CONTROL_SCHEMA),  # PK: time_control
-    "dim_results": _ddl_columns(DIM_RESULTS_SCHEMA),  # PK: result_code
-    "fact_games": _ddl_columns(FACT_GAMES_SCHEMA),  # PK: game_url
+    **{dim: _ddl_columns(schema) for dim, schema in DIM_SCHEMAS.items()},
+    "fact_games": _ddl_columns(FACT_GAMES_SCHEMA),
 }
 
 

@@ -31,7 +31,7 @@ from pyspark.sql import types as T
 
 from ..plans.gold import build_gold, merge_fact
 from ..plans.silver import bronze_to_silver
-from ..schemas import RAW_GAME_SCHEMA
+from ..schemas import DIM_KEYS, DIM_SCHEMAS, FACT_GAMES_SCHEMA, RAW_GAME_SCHEMA
 from ..sources.tables import read_events_raw, repair_events_ts
 
 
@@ -90,35 +90,53 @@ def run_incremental_gold(
 
     silver_stream = stream_bronze_to_silver(spark, bronze_dir)
     fact_path = os.path.join(gold_dir, "fact_games")
+    # the fact is read back under its declared schema plus the partition
+    # columns, so no read pays a footer-inference job
+    fact_schema = T.StructType(
+        FACT_GAMES_SCHEMA.fields
+        + [T.StructField(c, T.IntegerType()) for c in ("year", "month")]
+    )
+
+    def read_fact() -> DataFrame:
+        return spark.read.schema(fact_schema).parquet(fact_path)
 
     from ..operators.commit import (
         has_partition_dirs,
         recover_pending_swaps,
         two_phase_partition_overwrite,
     )
-    from ..operators.merge import insert_if_absent
+    from ..operators.merge import absent_rows
     from ..sources.tables import fs_exists
 
-    DIM_KEYS = {
-        "dim_openings": ["pgn_eco_url"],
-        "dim_date": ["game_date"],
-        "dim_time_control": ["time_control"],
-        "dim_results": ["result_code"],
-    }
-
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Build this batch's gold layer first (dims + projection +
-        # in-batch latest-wins); localCheckpoint pins the fact so the
-        # month probe below and the merge/write share one computation
-        # and the write cannot read-from-while-writing.
-        # finish any fact swap a previous attempt crashed mid-commit
-        # BEFORE anything reads the fact this batch
+        # Finish any fact swap a previous attempt crashed mid-commit
+        # BEFORE anything reads the fact this batch.
         recover_pending_swaps(spark, fact_path)
-        gold = build_gold(spark, batch_df, username, run_ts)
+        # The batch's silver is evaluated once, here: build_gold forks
+        # it into the fact, the three broadcast dims of the star-join
+        # validation and the dim appends, and each fork would otherwise
+        # re-scan the month's bronze JSON (a multiLine file: one task)
+        # and re-run the PGN regex projection.  Pinned by
+        # test_incremental_gold_evaluates_silver_once.  (persist +
+        # unpersist ran 31 jobs a month against this form's 29.)  The
+        # checkpoint's blocks are freed by the context cleaner once the
+        # batch's frames are garbage collected.
+        silver = batch_df.localCheckpoint()
+        gold = build_gold(spark, silver, username, run_ts)
+        # localCheckpoint pins the fact so the month probe below and the
+        # merge/write share one computation and the write cannot
+        # read-from-while-writing.
         batch_fact = gold["fact_games"].localCheckpoint()
-        # T5: dims append-if-absent per micro-batch (the reference's
-        # monthly create_dim_* tasks).  Dims are broadcast-sized at any
-        # data scale, so a full-file rewrite per batch is O(dim), fine.
+        # T5: dims are append-only per micro-batch (the reference's
+        # monthly create_dim_* tasks): only the batch's rows whose key
+        # the dim lacks are appended, probed against the key column
+        # alone under its declared schema (no footer-inference job).  A
+        # dim is never deleted and rewritten, so a crash anywhere in the
+        # batch loses no earlier month's rows, and the replayed batch
+        # appends nothing it already wrote (pinned by
+        # test_incremental_gold_dims_survive_crash_replay).  The cost is
+        # one small file per dim per batch; compacting them is table
+        # maintenance, outside the batch.
         # (r11: overlapping the four dim chains in a thread pool was
         # measured and REJECTED — 9.6 s → 12.3 s best-of-3; inside a
         # micro-batch the tiny concurrent jobs contend on the batch-
@@ -126,15 +144,15 @@ def run_incremental_gold(
         # the top-level artifact writes that did benefit.)
         for dim, keys in DIM_KEYS.items():
             dim_path = os.path.join(gold_dir, dim)
-            existing_dim = (
-                spark.read.parquet(dim_path)
+            key_schema = T.StructType([DIM_SCHEMAS[dim][k] for k in keys])
+            existing_keys = (
+                spark.read.schema(key_schema).parquet(dim_path)
                 if fs_exists(spark, dim_path)
                 else None
             )
-            merged_dim = insert_if_absent(
-                existing_dim, gold[dim], keys
-            ).localCheckpoint()
-            merged_dim.write.mode("overwrite").parquet(dim_path)
+            absent_rows(existing_keys, gold[dim], keys).write.mode(
+                "append"
+            ).parquet(dim_path)
         # Months this batch touches — driver-sized (one row per month;
         # a monthly re-pull touches 1-2). Re-pulled games may carry
         # game_dates outside the bronze file's nominal month, so probe
@@ -176,7 +194,7 @@ def run_incremental_gold(
             )
             stale_months = {
                 (r["y"], r["m"])
-                for r in spark.read.parquet(fact_path)
+                for r in read_fact()
                 .select("game_url", "year", "month")
                 .where(~in_batch_months)
                 .join(F.broadcast(batch_keys), "game_url", "left_semi")
@@ -196,9 +214,7 @@ def run_incremental_gold(
                 ],
             )
             # partition pruning: only the overlapping months are read
-            existing = (
-                spark.read.parquet(fact_path).where(hit).drop("year", "month")
-            )
+            existing = read_fact().where(hit).drop("year", "month")
         merged = merge_fact(existing, batch_fact).localCheckpoint()
         out = merged.withColumn("year", F.year("game_date")).withColumn(
             "month", F.month("game_date")

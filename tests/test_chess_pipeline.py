@@ -324,6 +324,26 @@ def test_not_in_null_semantics(spark):
     assert {r.k for r in strict.collect()} == {"a", None}
 
 
+def test_absent_rows_null_safe_keys(spark):
+    """The append-only dim sinks write absent_rows: distinct incoming rows
+    whose key is new, with NULL matching NULL, so a replayed append of a
+    NULL-key row adds nothing."""
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.operators.merge import (
+        absent_rows,
+    )
+
+    existing = spark.createDataFrame([(None, "x"), ("a", "y")], "k: string, v: string")
+    incoming = spark.createDataFrame(
+        [(None, "x"), ("a", "z"), ("b", "w"), ("b", "w")], "k: string, v: string"
+    )
+    fresh = absent_rows(existing.select("k"), incoming, ["k"])
+    assert {tuple(r) for r in fresh.collect()} == {("b", "w")}
+    appended = existing.unionByName(fresh)
+    assert absent_rows(appended, incoming, ["k"]).count() == 0
+    # an empty target takes every distinct incoming row
+    assert absent_rows(None, incoming, ["k"]).count() == 3
+
+
 def test_analytics_views(spark, silver, openings_lookup):
     gold = build_gold(
         spark, silver, fx.USERNAME, "2024-02-01 00:00:00",
@@ -631,6 +651,41 @@ def test_warehouse_incremental_load_honors_watermark(
         assert spark.table(f"{db}.fact_games").count() == n1 + 45
         # dims stayed insert-if-absent (15 static result codes, no dups)
         assert spark.table(f"{db}.dim_results").count() == 15
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def test_warehouse_reload_leaves_dims_unchanged(
+    spark, silver, openings_lookup, tmp_path
+):
+    """The warehouse dims are append-only: loading the same gold twice
+    (a replayed load) leaves every dim exactly as the first load left
+    it, one row per key."""
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.plans.warehouse import (
+        load_warehouse,
+    )
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.schemas import (
+        DIM_KEYS,
+    )
+
+    db = "chess_dw_reload_test"
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{tmp_path}/db'")
+    try:
+        gold = build_gold(
+            spark, silver, fx.USERNAME, "2024-02-01 00:00:00",
+            openings_lookup=openings_lookup,
+        )
+        load_warehouse(spark, gold, schema=db)
+        first = {
+            dim: sorted(map(tuple, spark.table(f"{db}.{dim}").collect()))
+            for dim in DIM_KEYS
+        }
+        load_warehouse(spark, gold, schema=db)
+        for dim, keys in DIM_KEYS.items():
+            rows = sorted(map(tuple, spark.table(f"{db}.{dim}").collect()))
+            assert rows == first[dim], dim
+            n_keys = spark.table(f"{db}.{dim}").select(*keys).distinct().count()
+            assert len(rows) == n_keys, dim
     finally:
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 

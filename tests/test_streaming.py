@@ -73,6 +73,43 @@ def test_incremental_gold_matches_batch(spark, tmp_path):
         assert expected.exceptAll(streamed_dim).count() == 0, dim
 
 
+def test_incremental_gold_evaluates_silver_once(spark, tmp_path, monkeypatch):
+    """merge_batch materializes the batch's silver before build_gold forks
+    it (fact, star-join dims, dim appends): every leaf of the frame
+    build_gold receives is a checkpoint or in-memory relation, never a
+    lineage back to the bronze JSON scan that each fork would re-run.
+    foreachBatch hands over its batch as a LogicalRDD whose RDD still
+    holds that scan, so a LogicalRDD leaf is checked down to its RDD."""
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.streaming import (
+        pipeline,
+    )
+
+    bronze = tmp_path / "bronze"
+    bronze.mkdir()
+    demo.write_month_json(str(bronze / "2024-01-games.json"), month=1)
+    leaves_seen = []
+    real = pipeline.build_gold
+
+    def spy(spark_, silver, *args, **kwargs):
+        leaves = silver._jdf.queryExecution().optimizedPlan().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            kind = leaf.getClass().getSimpleName()
+            lineage = leaf.rdd().toDebugString() if kind == "LogicalRDD" else ""
+            leaves_seen.append((kind, "FileScanRDD" in lineage))
+        return real(spark_, silver, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "build_gold", spy)
+    run_incremental_gold(
+        spark, str(bronze), str(tmp_path / "gold"), str(tmp_path / "ckpt"),
+        demo.USERNAME, "2024-03-01 00:00:00",
+    )
+    assert leaves_seen, "build_gold never ran"
+    for kind, scans_bronze in leaves_seen:
+        assert kind in ("LogicalRDD", "InMemoryRelation"), kind
+        assert not scans_bronze, "build_gold's silver re-scans the bronze JSON"
+
+
 def test_incremental_gold_untouched_partitions(spark, tmp_path):
     """Partition-scoped merge: when a new month arrives, months the
     batch doesn't touch must remain byte-identical on disk (the merge

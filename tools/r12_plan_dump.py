@@ -1,8 +1,8 @@
 """Dump `.explain("formatted")` for named queries to
-plans/r12/<query>_<tag>.txt — the before/after evidence files the r11
-optimization round commits (the judge checks plan claims against these).
+plans/r12/<query>_<tag>.txt — the before/after evidence files the r12
+optimization round commits (plan claims are checked against these).
 
-Usage: python tools/r11_plan_dump.py <before|after> query [query ...]
+Usage: python tools/r12_plan_dump.py <before|after> query [query ...]
 """
 
 from __future__ import annotations
